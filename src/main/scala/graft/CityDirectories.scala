@@ -18,6 +18,9 @@ import org.apache.spark.sql.functions._
   * dependencies); this implementation preserves that: parse/geocode/
   * transform produce NO shuffle — the only exchanges are the optional
   * sink `partitionBy` and the `geocodeViaJoin` variant's re-collect.
+  * Chained, parse → geocode → transform is one scan of the archives
+  * feeding one map-side generator that emits every record kind; there
+  * is no `Union`, so nothing upstream is recomputed per record kind.
   */
 object CityDirectories {
 
@@ -59,7 +62,9 @@ object CityDirectories {
     Geocoder.geocode(lines, Geocoder.buildIndex(spark, dim))
 
   /** `transform` step (city-directories.js:338-451): tagged union of
-    * object/relation/log records.
+    * object/relation/log records, made by one generator per line (see
+    * [[TransformOps.taggedUnion]]), so the fused pipeline scans, parses
+    * and geocodes each archive once.
     */
   def transform(geocoded: DataFrame): DataFrame =
     TransformOps.taggedUnion(geocoded)

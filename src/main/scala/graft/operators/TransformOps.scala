@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
 
 /** The reference's `transform` step (city-directories.js:338-451): each
   * geocoded line fans out into a tagged union of
@@ -9,10 +10,14 @@ import org.apache.spark.sql.functions._
   *   relation — one `st:in` edge per found address (:395-399, :438-441)
   *   log      — id-minting failures (:356-364) and geocode misses (:401-404)
   *
-  * Spark-first: three narrow `select`s over the same input, unioned by
-  * name (SURVEY.md O-31/O-40). No explode-of-array-of-variants, no UDFs —
-  * every branch is a codegen'd projection, and the union is three
-  * pipelined map stages, not a shuffle. Write side: `partitionBy("type")`
+  * Spark-first: ONE generator pass. Each line builds an array of
+  * 13-field records in `unionColumns` order — the object, then one
+  * relation per found address and one miss log per not-found location;
+  * or only the id-minting log when no id can be minted — and `inline`
+  * turns it into rows. The archive scan, column detection, entry parse
+  * and geocode upstream therefore run once per line: a `Union` of
+  * per-kind `select`s would re-run that whole chain once per branch.
+  * No UDFs, no shuffle, no cache. Write side: `partitionBy("type")`
   * gives the reference's per-kind outputs in one pass.
   *
   * Input columns: uuid, yearMin, yearMax, pageUuid, pageNum, bbox, text,
@@ -54,11 +59,17 @@ object TransformOps {
   }
 
   def taggedUnion(lines: DataFrame): DataFrame = {
-    val id = CityDirOps.mintId(
-      col("yearMin"), col("yearMax"), col("pageNum"), col("bbox"))
-    val withId = lines.withColumn("_id", id)
+    val withId = lines.withColumn("_id", CityDirOps.mintId(
+      col("yearMin"), col("yearMax"), col("pageNum"), col("bbox")))
+    val id = col("_id")
+    // as `explode(null)` emits nothing, a null geocoded array gives no
+    // edges and no miss logs; empty, not null, because `concat` with a
+    // null array is null and would drop the object record too. The
+    // object itself keeps `data.geocoded` null.
+    val geocoded = coalesce(col("geocoded"),
+      array().cast(lines.schema("geocoded").dataType))
 
-    val found = filter(col("geocoded"), g => g.getField("found"))
+    val found = filter(geocoded, g => g.getField("found"))
     // address projection (city-directories.js:384-391)
     val addresses = transform(found, g => struct(
       g.getField("result").getField("properties").getField("address")
@@ -73,14 +84,14 @@ object TransformOps {
 
     // object record (city-directories.js:410-429); validSince/validUntil
     // are the year union's min/max (:416-417)
-    val objects = withId.filter(col("_id").isNotNull).select(
-      lit("object").as("type"),
-      col("_id").as("id"),
-      lit("st:Person").as("objType"),
-      CityDirOps.firstElement(col("parsed.subjects")).as("name"),
-      col("yearMin").as("validSince"),
-      col("yearMax").as("validUntil"),
-      struct(
+    val objectFields: Seq[(String, Column)] = Seq(
+      "type" -> lit("object"),
+      "id" -> id,
+      "objType" -> lit("st:Person"),
+      "name" -> CityDirOps.firstElement(col("parsed.subjects")),
+      "validSince" -> col("yearMin"),
+      "validUntil" -> col("yearMax"),
+      "data" -> struct(
         col("uuid").as("volumeUuid"),
         col("pageUuid"),
         col("pageNum"),
@@ -88,37 +99,39 @@ object TransformOps {
         col("text"),
         CityDirOps.firstElement(col("parsed.occupations")).as("occupation"),
         col("parsed.locations").as("locations"),
-        addresses.as("geocoded")).as("data"),
-      CityDirOps.multiPoint(geometries).as("geometry"))
+        when(col("geocoded").isNotNull, addresses).as("geocoded")),
+      "geometry" -> CityDirOps.multiPoint(geometries))
+
+    // every record is one struct in `unionColumns` order; a column its
+    // kind does not set is a null typed from the resolved object
+    // projection (string for the edge- and log-only columns)
+    val objectSchema = withId.select(
+      objectFields.map { case (n, c) => c.as(n) }: _*).schema
+    def record(fields: (String, Column)*): Column = {
+      val set = fields.toMap
+      struct(unionColumns.map { c =>
+        set.getOrElse(c, lit(null).cast(
+          if (objectSchema.fieldNames.contains(c)) objectSchema(c).dataType
+          else StringType)).as(c)
+      }: _*)
+    }
 
     // edge records: one per found address (city-directories.js:395-399)
-    val relations = withId.filter(col("_id").isNotNull)
-      .select(col("_id"), explode(addresses).as("_addr"))
-      .select(
-        lit("relation").as("type"),
-        col("_addr.id").as("to"),
-        col("_id").as("from"),
-        lit("st:in").as("relType"))
-
+    val relations = transform(addresses, a => record(
+      "type" -> lit("relation"), "to" -> a.getField("id"),
+      "from" -> id, "relType" -> lit("st:in")))
     // log records: geocode misses (city-directories.js:401-404) …
-    val missLogs = withId.filter(col("_id").isNotNull)
-      .select(col("_id"),
-        explode(filter(col("geocoded"), g => !g.getField("found"))).as("_miss"))
-      .select(
-        lit("log").as("type"),
-        col("_id").as("id"),
-        col("_miss.error").as("error"))
+    val missLogs = transform(filter(geocoded, g => !g.getField("found")),
+      m => record("type" -> lit("log"), "id" -> id,
+        "error" -> m.getField("error")))
     // … and id-minting failures (city-directories.js:356-364; message
     // string kept verbatim, typo included)
-    val idLogs = withId.filter(col("_id").isNull).select(
-      lit("log").as("type"),
-      lit("Coult not create ID").as("error"),
-      col("text"))
+    val idLog = record("type" -> lit("log"),
+      "error" -> lit("Coult not create ID"), "text" -> col("text"))
 
-    objects
-      .unionByName(relations, allowMissingColumns = true)
-      .unionByName(missLogs, allowMissingColumns = true)
-      .unionByName(idLogs, allowMissingColumns = true)
+    val records = when(id.isNull, array(idLog))
+      .otherwise(concat(array(record(objectFields: _*)), relations, missLogs))
+    withId.select(inline(records))
   }
 
   /** Upsert (merge) without a table format: the updated rows win on

@@ -67,6 +67,30 @@ class PipelineSpec extends SparkSpec {
     assert(counts == Map("object" -> 24L, "relation" -> 20L, "log" -> 8L))
   }
 
+  test("transform: one generator equals the four-branch union, id-mint logs included") {
+    import graft.operators.{TaggedUnionReference, TransformOps}
+    // the fixture mints an id for every line, so add copies of one line
+    // that cannot be minted (page 0; empty bbox) and one whose geocoded
+    // array is null (an object with no edges and no miss logs)
+    val brown = geocoded.filter(col("uuid") === "vol-a-0001" &&
+      col("pageNum") === 2 && col("text").contains("Brown"))
+    val input = geocoded
+      .unionByName(brown.withColumn("pageNum", lit(0)))
+      .unionByName(brown.withColumn("bbox",
+        array().cast(geocoded.schema("bbox").dataType)))
+      .unionByName(brown.withColumn("geocoded",
+        lit(null).cast(geocoded.schema("geocoded").dataType)))
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.select(to_json(struct(TransformOps.unionColumns.map(col): _*)))
+        .as[String].collect().toSeq.sorted
+    val got = rows(CityDirectories.transform(input))
+    assert(got == rows(TaggedUnionReference.taggedUnion(input)))
+    val idLogs = got.filter(_.contains("Coult not create ID"))
+    assert(idLogs.size == 2 && idLogs.forall(_.contains("Brown")), idLogs)
+    // 24 + 1 objects, 20 relations, 8 miss logs, 2 id-mint logs
+    assert(got.size == 25 + 20 + 8 + 2)
+  }
+
   test("transform: object record shape matches the contract") {
     val o = union.filter(col("type") === "object" &&
         col("data.text").contains("Brown"))

@@ -408,6 +408,42 @@ class PlanShapeSpec extends SparkSpec {
       s"column pruning lost: ${sc.requiredSchema.fieldNames.toSet}")
   }
 
+  test("city-directory entry scans the archives once: one generator, no Union, no shuffle") {
+    // parse → geocode → transform must stay ONE map-side pass: a Union
+    // of per-kind branches re-runs the archive scan, column detection,
+    // entry parse and geocode once per branch. The manifest's broadcast
+    // (the availability join) is the only exchange, and it is no shuffle.
+    val df = SparkEntry.entry(spark)
+    df.collect()
+    val plan = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    def nodes(p: org.apache.spark.sql.execution.SparkPlan)
+        : Seq[org.apache.spark.sql.execution.SparkPlan] = {
+      val inner = p match {
+        case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
+          nodes(q.plan)
+        case _ => Nil
+      }
+      p +: (inner ++ p.children.flatMap(nodes))
+    }
+    val all = nodes(plan)
+    val archiveScans = all.collect {
+      case f: org.apache.spark.sql.execution.FileSourceScanExec
+          if f.relation.fileFormat.isInstanceOf[
+            org.apache.spark.sql.execution.datasources.binaryfile.BinaryFileFormat] => f
+    }
+    assert(archiveScans.size == 1, plan.toString)
+    assert(!all.exists(_.isInstanceOf[org.apache.spark.sql.execution.UnionExec]),
+      plan.toString)
+    assert(!all.exists(
+      _.isInstanceOf[org.apache.spark.sql.execution.exchange.ShuffleExchangeLike]),
+      plan.toString)
+    assert(all.exists(_.isInstanceOf[org.apache.spark.sql.execution.GenerateExec]),
+      plan.toString)
+  }
+
   test("entry parse is the codegen kernel, not a Scala UDF boundary") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
